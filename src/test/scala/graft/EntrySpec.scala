@@ -14,6 +14,27 @@ class EntrySpec extends SparkSpec {
     assert(missing.isEmpty, s"oracle without query: $missing")
   }
 
+  test("every oracleSql text matches its sha256 in oracle_sql.sha256") {
+    // The manifest makes any change to a DuckDB oracle text a visible diff
+    // of src/test/resources/oracle_sql.sha256 (one sorted `key sha256` line
+    // per key). To accept a change, apply the printed -/+ lines to the file.
+    def sha256(s: String): String =
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        .map(b => f"$b%02x").mkString
+    val live = SparkEntry.oracleSql.map { case (k, sql) => k -> sha256(sql) }
+    val src = scala.io.Source.fromResource("oracle_sql.sha256")(scala.io.Codec.UTF8)
+    val committed =
+      try src.getLines().filter(_.nonEmpty).map { l => val Array(k, h) = l.split(' '); k -> h }.toMap
+      finally src.close()
+    val diff = (live.keySet ++ committed.keySet).toSeq.sorted.flatMap { k =>
+      if (live.get(k) == committed.get(k)) Nil
+      else committed.get(k).map(h => s"-$k $h").toSeq ++ live.get(k).map(h => s"+$k $h")
+    }
+    if (diff.nonEmpty)
+      fail(s"oracle SQL differs from oracle_sql.sha256; apply these lines to it:\n${diff.mkString("\n")}")
+  }
+
   test("no SF-scaling table carries a broadcast hint (customer/supplier/part — AQE decides)") {
     // customer (150k×SF), supplier (10k×SF) and part (200k×SF) all grow
     // with SF — billions of rows at the 100 TB design point — so a

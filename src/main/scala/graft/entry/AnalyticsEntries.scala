@@ -1007,7 +1007,7 @@ private[graft] object AnalyticsEntries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  private val own: Map[String, String] = Map(
 
     "q1_pricing_summary" ->
       """SELECT l_returnflag, l_linestatus,
@@ -1031,15 +1031,6 @@ private[graft] object AnalyticsEntries {
         |GROUP BY l_orderkey, o_orderdate, o_orderpriority
         |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
 
-    "q3_shipping_colocated" ->
-      """SELECT l_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate, o_orderpriority,
-        |       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))), 2) AS DOUBLE) AS revenue
-        |FROM customer, orders, lineitem
-        |WHERE c_mktsegment = 'BUILDING' AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-        |  AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00' AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
-        |GROUP BY l_orderkey, o_orderdate, o_orderpriority
-        |ORDER BY revenue DESC, l_orderkey LIMIT 10""".stripMargin,
-
     "q5_local_supplier" ->
       """SELECT n_name, CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))), 2) AS DOUBLE) AS revenue
         |FROM customer, orders, lineitem, supplier, nation, region
@@ -1050,17 +1041,6 @@ private[graft] object AnalyticsEntries {
         |GROUP BY n_name ORDER BY revenue DESC, n_name""".stripMargin,
 
     "q7_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        |       CAST(year(l_shipdate) AS INTEGER) AS l_year,
-        |       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))), 2) AS DOUBLE) AS revenue
-        |FROM lineitem, orders, supplier, customer, nation n1, nation n2
-        |WHERE l_orderkey = o_orderkey AND l_suppkey = s_suppkey AND o_custkey = c_custkey
-        |  AND s_nationkey = n1.n_nationkey AND c_nationkey = n2.n_nationkey
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00' AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
-        |  AND n1.n_name <> n2.n_name
-        |GROUP BY 1, 2, 3 ORDER BY supp_nation, cust_nation, l_year""".stripMargin,
-
-    "q7_volume_colocated" ->
       """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
         |       CAST(year(l_shipdate) AS INTEGER) AS l_year,
         |       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))), 2) AS DOUBLE) AS revenue
@@ -1118,14 +1098,6 @@ private[graft] object AnalyticsEntries {
         |WHERE o_orderkey = t.l_orderkey AND c_custkey = o_custkey
         |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin,
 
-    "q18_large_orders_colocated" ->
-      """SELECT c_name, c_custkey, o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate, o_totalprice, round(qty, 2) AS qty
-        |FROM orders, customer,
-        |     (SELECT l_orderkey, sum(l_quantity) AS qty FROM lineitem GROUP BY l_orderkey
-        |      HAVING sum(l_quantity) > 300) t
-        |WHERE o_orderkey = t.l_orderkey AND c_custkey = o_custkey
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 20""".stripMargin,
-
     "q19_discounted_revenue" ->
       """SELECT CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))), 2) AS DOUBLE) AS revenue
         |FROM lineitem, part
@@ -1149,15 +1121,6 @@ private[graft] object AnalyticsEntries {
         |GROUP BY 1 ORDER BY o_year""".stripMargin,
 
     "q9_product_profit" ->
-      """SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
-        |       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))
-        |                      - CAST(p_retailprice * l_quantity * 0.5 AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_profit
-        |FROM lineitem, part, supplier, nation, orders
-        |WHERE l_partkey = p_partkey AND l_suppkey = s_suppkey AND s_nationkey = n_nationkey
-        |  AND l_orderkey = o_orderkey AND p_name LIKE '%widget%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q9_product_colocated" ->
       """SELECT n_name AS nation, CAST(year(o_orderdate) AS INTEGER) AS o_year,
         |       CAST(round(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * (1 - CAST(l_discount AS DECIMAL(12,2)))
         |                      - CAST(p_retailprice * l_quantity * 0.5 AS DECIMAL(12,2))), 2) AS DOUBLE) AS sum_profit
@@ -1247,29 +1210,6 @@ private[graft] object AnalyticsEntries {
         |ORDER BY s_name""".stripMargin,
 
     "q21_waiting_suppliers" ->
-      """SELECT s_name, CAST(count(DISTINCT l1.l_orderkey) AS BIGINT) AS numwait
-        |FROM supplier, lineitem l1, orders
-        |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
-        |  AND l1.l_shipdate > o_orderdate + INTERVAL 90 DAY
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3, orders o3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey AND o3.o_orderkey = l3.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_shipdate > o3.o_orderdate + INTERVAL 90 DAY)
-        |GROUP BY 1 ORDER BY numwait DESC, s_name LIMIT 20""".stripMargin,
-
-    "q12_ship_colocated" ->
-      """SELECT l_linestatus,
-        |  CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |  CAST(sum(CASE WHEN o_orderpriority NOT IN ('1-URGENT','2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-        |FROM orders, lineitem
-        |WHERE o_orderkey = l_orderkey
-        |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |  AND l_shipdate >= TIMESTAMP '1996-01-01 00:00:00' AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q21_waiting_colocated" ->
       """SELECT s_name, CAST(count(DISTINCT l1.l_orderkey) AS BIGINT) AS numwait
         |FROM supplier, lineitem l1, orders
         |WHERE s_suppkey = l1.l_suppkey AND o_orderkey = l1.l_orderkey AND o_orderstatus = 'F'
@@ -1445,5 +1385,15 @@ private[graft] object AnalyticsEntries {
         |       CAST(sum(converted) AS BIGINT) AS n_converted,
         |       round(CAST(sum(converted) AS DOUBLE) / count(*), 6) AS conversion_rate
         |FROM conv""".stripMargin
+  )
+
+  val oracleSql: Map[String, String] = own ++ Map(
+    // The colocated variants run the same query over the bucketed facts: same answer, better plan.
+    "q3_shipping_colocated" -> own("q3_shipping_priority"),
+    "q7_volume_colocated" -> own("q7_volume_shipping"),
+    "q18_large_orders_colocated" -> own("q18_large_orders"),
+    "q9_product_colocated" -> own("q9_product_profit"),
+    "q12_ship_colocated" -> own("q12_ship_priority"),
+    "q21_waiting_colocated" -> own("q21_waiting_suppliers")
   )
 }

@@ -524,7 +524,7 @@ private[graft] object AnnEntries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  private val own: Map[String, String] = Map(
 
     "ann_bruteforce_topk" ->
       """SELECT vec_id, round(list_cosine_similarity(CAST(embedding AS DOUBLE[]),
@@ -559,55 +559,6 @@ private[graft] object AnnEntries {
     // L2 (ties → lower cell, the NearestCells insertion rule) — the
     // whole IVF build is recomputed in SQL.
     "ann_ivf_build" ->
-      """WITH cents AS (
-        |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id) - 1 AS cell,
-        |         CAST(embedding AS DOUBLE[]) AS c
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |  ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id
-        |  LIMIT 16),
-        |dists AS (SELECT e.vec_id, c.cell, list_distance(CAST(e.embedding AS DOUBLE[]), c.c) AS d
-        |          FROM embeddings e CROSS JOIN cents c WHERE e.embedding IS NOT NULL),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dists) WHERE rn = 1)
-        |SELECT CAST(cell AS INTEGER) AS cell, count(*) AS n_vectors FROM assign GROUP BY cell ORDER BY cell""".stripMargin,
-
-    // The PQ/OPQ build keys emit the coarse-cell occupancy histogram of
-    // the SAME md5-sampled 16-cell quantizer (pqIndex/opqIndex/
-    // opqIndexFull all call ivfIndex(nLists=16); encodeUdf picks the
-    // cell from the RAW vector before any residual rotation or
-    // codebook, so the emitted histogram is codebook- and rotation-
-    // independent by construction) — ann_ivf_build's full replication
-    // applies verbatim, checked independently per key. The codebook/
-    // rotation training itself stays ReplicaSpec-verified
-    // (reconstruction-error monotonicity, recall floors, OPQ ≤ PQ
-    // distortion).
-    "ann_ivf_pq_build" ->
-      """WITH cents AS (
-        |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id) - 1 AS cell,
-        |         CAST(embedding AS DOUBLE[]) AS c
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |  ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id
-        |  LIMIT 16),
-        |dists AS (SELECT e.vec_id, c.cell, list_distance(CAST(e.embedding AS DOUBLE[]), c.c) AS d
-        |          FROM embeddings e CROSS JOIN cents c WHERE e.embedding IS NOT NULL),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dists) WHERE rn = 1)
-        |SELECT CAST(cell AS INTEGER) AS cell, count(*) AS n_vectors FROM assign GROUP BY cell ORDER BY cell""".stripMargin,
-
-    "ann_ivf_opq_build" ->
-      """WITH cents AS (
-        |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id) - 1 AS cell,
-        |         CAST(embedding AS DOUBLE[]) AS c
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |  ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id
-        |  LIMIT 16),
-        |dists AS (SELECT e.vec_id, c.cell, list_distance(CAST(e.embedding AS DOUBLE[]), c.c) AS d
-        |          FROM embeddings e CROSS JOIN cents c WHERE e.embedding IS NOT NULL),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dists) WHERE rn = 1)
-        |SELECT CAST(cell AS INTEGER) AS cell, count(*) AS n_vectors FROM assign GROUP BY cell ORDER BY cell""".stripMargin,
-
-    "ann_ivf_opq_full_build" ->
       """WITH cents AS (
         |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id) - 1 AS cell,
         |         CAST(embedding AS DOUBLE[]) AS c
@@ -785,28 +736,6 @@ private[graft] object AnnEntries {
         |FROM embeddings e JOIN assign a USING (vec_id) JOIN probed p ON a.cell = p.cell
         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
 
-    // The IVF serving tier is result-identical to ann_ivf_topk by
-    // construction (same md5-sampled centroids, same nearest-cell probe
-    // rule, same cosine fold) — same oracle, checked independently.
-    "ann_ivf_serving" ->
-      """WITH cents AS (
-        |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id) - 1 AS cell,
-        |         CAST(embedding AS DOUBLE[]) AS c
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |  ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id
-        |  LIMIT 16),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0),
-        |probed AS (SELECT cell FROM (
-        |  SELECT c.cell, row_number() OVER (ORDER BY list_distance((SELECT qe FROM q), c.c), c.cell) AS rn
-        |  FROM cents c) WHERE rn <= 6),
-        |dists AS (SELECT e.vec_id, c.cell, list_distance(CAST(e.embedding AS DOUBLE[]), c.c) AS d
-        |          FROM embeddings e CROSS JOIN cents c WHERE e.embedding IS NOT NULL),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dists) WHERE rn = 1)
-        |SELECT e.vec_id, round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), (SELECT qe FROM q)), 6) AS cos
-        |FROM embeddings e JOIN assign a USING (vec_id) JOIN probed p ON a.cell = p.cell
-        |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-
     // Incremental = the faiss add() contract: centroids from the BASE
     // corpus (vec_id % 5 <> 0), every vector (base ∪ delta) assigned to
     // those frozen centroids, same probe path over the grown index.
@@ -827,29 +756,6 @@ private[graft] object AnnEntries {
         |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dists) WHERE rn = 1)
         |SELECT e.vec_id, round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), (SELECT qe FROM q)), 6) AS cos
         |FROM embeddings e JOIN assign a USING (vec_id) JOIN probed p ON a.cell = p.cell
-        |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
-
-    // The serving tier is result-identical to ann_lsh_topk by
-    // construction (same signature kernel, same candidate rule, same
-    // cosine fold) — same oracle, checked independently.
-    "ann_lsh_serving" ->
-      """WITH planes AS (
-        |  SELECT t.t, p.p,
-        |         list_transform(generate_series(1,64), d ->
-        |           (CAST(('0x'||substr(md5(p.p || ':' || (d-1) || ':' || (t.t*7919+1)),1,15)) AS BIGINT) % 100000)/100000.0 - 0.5) AS pl
-        |  FROM generate_series(0,7) t(t) CROSS JOIN generate_series(0,3) p(p)),
-        |sigs AS (
-        |  SELECT e.vec_id, pl.t,
-        |         sum(CASE WHEN list_dot_product(CAST(e.embedding AS DOUBLE[]), pl.pl) > 0 THEN (1 << pl.p) ELSE 0 END) AS sig
-        |  FROM embeddings e CROSS JOIN planes pl
-        |  WHERE e.embedding IS NOT NULL
-        |  GROUP BY e.vec_id, pl.t),
-        |q AS (SELECT t, sig FROM sigs WHERE vec_id = 0),
-        |cand AS (SELECT DISTINCT s.vec_id FROM sigs s JOIN q ON s.t = q.t AND s.sig = q.sig)
-        |SELECT e.vec_id,
-        |       round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
-        |             (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS cos
-        |FROM embeddings e JOIN cand USING (vec_id)
         |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
 
     // Batched serving over the 4-table multi-probe index: same bucket
@@ -1240,5 +1146,16 @@ private[graft] object AnnEntries {
         |           (SELECT CAST(embedding AS DOUBLE[]) FROM embeddings WHERE vec_id = 0)), 6) AS cos
         |  FROM embeddings WHERE vec_id <> 0) t
         |WHERE cos >= 0.3 ORDER BY cos DESC, vec_id""".stripMargin
+  )
+
+  val oracleSql: Map[String, String] = own ++ Map(
+    // PQ/OPQ builds histogram the same ivfIndex(nLists = 16) cells, picked from the raw vector.
+    "ann_ivf_pq_build" -> own("ann_ivf_build"),
+    "ann_ivf_opq_build" -> own("ann_ivf_build"),
+    "ann_ivf_opq_full_build" -> own("ann_ivf_build"),
+    // Same md5-sampled centroids, nearest-cell probe rule and cosine fold as ann_ivf_topk.
+    "ann_ivf_serving" -> own("ann_ivf_topk"),
+    // Same signature kernel, candidate rule and cosine fold as ann_lsh_topk.
+    "ann_lsh_serving" -> own("ann_lsh_topk")
   )
 }

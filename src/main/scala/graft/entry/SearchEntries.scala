@@ -2269,7 +2269,7 @@ private[graft] object SearchEntries {
       ))
   )
 
-  val oracleSql: Map[String, String] = Map(
+  private val own: Map[String, String] = Map(
 
     "search_match" ->
       """SELECT doc_id, score FROM (
@@ -2643,14 +2643,6 @@ private[graft] object SearchEntries {
         |WHERE bucket IS NOT NULL GROUP BY bucket ORDER BY bucket""".stripMargin,
 
     "search_top_hits" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |         CAST(row_number() OVER (PARTITION BY o_orderpriority
-        |              ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rank
-        |  FROM orders) t
-        |WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin,
-
-    "search_top_hits_native" ->
       """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
         |  SELECT o_orderpriority, o_orderkey, o_totalprice,
         |         CAST(row_number() OVER (PARTITION BY o_orderpriority
@@ -3738,5 +3730,9 @@ private[graft] object SearchEntries {
         |                    + ((user_id * 7) % 250) * 256 + (event_id % 254 + 1) AS DOUBLE) AS ipnum
         |        FROM events) i) t
         |WHERE bucket IS NOT NULL GROUP BY bucket ORDER BY bucket""".stripMargin
+  )
+
+  val oracleSql: Map[String, String] = own ++ Map(
+    "search_top_hits_native" -> own("search_top_hits")
   )
 }

@@ -15,7 +15,9 @@ import graft.EntrySupport._
 /** Search wire twins: the JSON request-body executor surface.
   * Split out of the monolithic SparkEntry registry (round 10)
   * purely mechanically — entry bodies and oracle SQL are
-  * byte-identical; SparkEntry aggregates the family maps.
+  * byte-identical; SparkEntry aggregates the family maps. A twin whose
+  * answer must equal a structured key's names that key's oracle in
+  * `oracleSql` rather than repeating its text.
   */
 private[graft] object SearchWireEntries {
 
@@ -2071,30 +2073,8 @@ private[graft] object SearchWireEntries {
 
   val oracleSql: Map[String, String] = Map(
 
-    // The wire knn-ivf path is scoreAgainstIvf against the SAME memoized
-    // index, query vector (float→text→float round-trips exactly), k and
-    // nprobe as the structured ann_ivf_topk — and that coarse quantizer
-    // is fully oracle-checked since r16 (md5-sampled centroids, argmin
-    // replay), so this key shares the oracle verbatim (r17, the
-    // ann_lsh_serving precedent).
-    "search_dsl_json_knn_ivf" ->
-      """WITH cents AS (
-        |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id) - 1 AS cell,
-        |         CAST(embedding AS DOUBLE[]) AS c
-        |  FROM embeddings WHERE embedding IS NOT NULL
-        |  ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id
-        |  LIMIT 16),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0),
-        |probed AS (SELECT cell FROM (
-        |  SELECT c.cell, row_number() OVER (ORDER BY list_distance((SELECT qe FROM q), c.c), c.cell) AS rn
-        |  FROM cents c) WHERE rn <= 6),
-        |dists AS (SELECT e.vec_id, c.cell, list_distance(CAST(e.embedding AS DOUBLE[]), c.c) AS d
-        |          FROM embeddings e CROSS JOIN cents c WHERE e.embedding IS NOT NULL),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT vec_id, cell, row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn FROM dists) WHERE rn = 1)
-        |SELECT e.vec_id, round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), (SELECT qe FROM q)), 6) AS cos
-        |FROM embeddings e JOIN assign a USING (vec_id) JOIN probed p ON a.cell = p.cell
-        |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
+    // Same memoized index, query vector, k and nprobe as the structured ann_ivf_topk.
+    "search_dsl_json_knn_ivf" -> AnnEntries.oracleSql("ann_ivf_topk"),
 
     // The wire hnsw path is graphSearch against the SAME memoized graph,
     // query vector, k=10, ef_search=16, rounds=3 as the structured
@@ -2103,74 +2083,8 @@ private[graft] object SearchWireEntries {
     // shape's vec_id (the knn_ivf / knn_pq precedent).
     "search_dsl_json_knn_hnsw" -> GraphOracle.singleTopkSql("vec_id"),
 
-    // The wire knn-ivf-pq path is scoreAgainstPq against the SAME
-    // memoized PQ index, query vector, k, nprobe (6) and rerank window
-    // as the structured ann_ivf_pq_topk — and the whole PQ training
-    // trajectory is fully oracle-checked since r17 (md5-salted seed
-    // sample, fixed-point per-subspace Lloyd, double residuals), so
-    // this key shares that oracle verbatim (the knn_ivf precedent).
-    "search_dsl_json_knn_pq" ->
-      """WITH base AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE embedding IS NOT NULL),
-        |cents AS (
-        |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id) - 1 AS cell, v AS c
-        |  FROM base
-        |  ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)),1,15)) AS BIGINT), vec_id
-        |  LIMIT 16),
-        |assign AS (SELECT vec_id, cell FROM (
-        |  SELECT b.vec_id, c.cell, row_number() OVER (PARTITION BY b.vec_id ORDER BY list_distance(b.v, c.c), c.cell) AS rn
-        |  FROM base b CROSS JOIN cents c) WHERE rn = 1),
-        |resid AS (
-        |  SELECT b.vec_id, a.cell, list_transform(generate_series(1,64), d -> b.v[d] - c.c[d]) AS r
-        |  FROM base b JOIN assign a USING (vec_id) JOIN cents c ON c.cell = a.cell),
-        |seeds AS (
-        |  SELECT row_number() OVER (ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)||':pq'),1,15)) AS BIGINT), vec_id) - 1 AS code,
-        |         list_transform(r, x -> CAST(CAST(x AS REAL) AS DOUBLE)) AS sr
-        |  FROM resid
-        |  ORDER BY CAST(('0x'||substr(md5(CAST(vec_id AS VARCHAR)||':pq'),1,15)) AS BIGINT), vec_id
-        |  LIMIT 16),
-        |b0 AS (SELECT m.m AS sub, s.code, list_slice(s.sr, m.m*8+1, m.m*8+8) AS bk
-        |       FROM seeds s CROSS JOIN generate_series(0,7) m(m)),
-        |subres AS (SELECT vec_id, m.m AS sub, list_slice(r, m.m*8+1, m.m*8+8) AS sr
-        |           FROM resid CROSS JOIN generate_series(0,7) m(m)),
-        |la AS (SELECT vec_id, sub, code FROM (
-        |  SELECT s.vec_id, s.sub, b.code,
-        |         row_number() OVER (PARTITION BY s.vec_id, s.sub ORDER BY list_distance(s.sr, b.bk), b.code) AS rn
-        |  FROM subres s JOIN b0 b ON b.sub = s.sub) WHERE rn = 1),
-        |ms AS (SELECT la.sub, la.code, d.d,
-        |              sum(CAST(floor(s.sr[d.d]*1000000.0 + 0.5) AS BIGINT)) AS fs,
-        |              count(*) AS n
-        |       FROM subres s JOIN la ON la.vec_id = s.vec_id AND la.sub = s.sub
-        |       CROSS JOIN generate_series(1,8) d(d)
-        |       GROUP BY la.sub, la.code, d.d),
-        |b0d AS (SELECT sub, code, d.d, bk[d.d] AS x FROM b0 CROSS JOIN generate_series(1,8) d(d)),
-        |b1 AS (SELECT b0d.sub, b0d.code,
-        |              list(CASE WHEN ms.n IS NOT NULL AND ms.n > 0
-        |                   THEN CAST(CAST(CAST(ms.fs AS DOUBLE)/(CAST(ms.n AS DOUBLE)*1000000.0) AS REAL) AS DOUBLE)
-        |                   ELSE b0d.x END ORDER BY b0d.d) AS bk
-        |       FROM b0d LEFT JOIN ms ON ms.sub = b0d.sub AND ms.code = b0d.code AND ms.d = b0d.d
-        |       GROUP BY b0d.sub, b0d.code),
-        |codes AS (SELECT vec_id, sub, code FROM (
-        |  SELECT s.vec_id, s.sub, b.code,
-        |         row_number() OVER (PARTITION BY s.vec_id, s.sub ORDER BY list_distance(s.sr, b.bk), b.code) AS rn
-        |  FROM subres s JOIN b1 b ON b.sub = s.sub) WHERE rn = 1),
-        |q AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0),
-        |probed AS (SELECT cell FROM (
-        |  SELECT c.cell, row_number() OVER (ORDER BY list_distance((SELECT qe FROM q), c.c), c.cell) AS rn FROM cents c) WHERE rn <= 6),
-        |qres AS (SELECT p.cell, list_transform(generate_series(1,64), d -> q.qe[d] - c.c[d]) AS qr
-        |         FROM probed p JOIN cents c ON c.cell = p.cell CROSS JOIN q),
-        |lut AS (SELECT t.cell, t.sub, t.code, list_dot_product(t.diff, t.diff) AS dv FROM (
-        |         SELECT qres.cell, b.sub, b.code,
-        |                list_transform(generate_series(1,8), j -> qres.qr[b.sub*8+j] - b.bk[j]) AS diff
-        |         FROM qres CROSS JOIN b1 b) t),
-        |adc AS (SELECT c2.vec_id,
-        |               list_dot_product(list(l.dv ORDER BY l.sub), [1.0,1.0,1.0,1.0,1.0,1.0,1.0,1.0]) AS adc
-        |        FROM codes c2 JOIN assign a ON a.vec_id = c2.vec_id
-        |        JOIN lut l ON l.cell = a.cell AND l.sub = c2.sub AND l.code = c2.code
-        |        GROUP BY c2.vec_id),
-        |cand AS (SELECT vec_id FROM adc ORDER BY adc, vec_id LIMIT 50)
-        |SELECT e.vec_id, round(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), (SELECT qe FROM q)), 6) AS cos
-        |FROM embeddings e JOIN cand USING (vec_id)
-        |ORDER BY cos DESC, vec_id LIMIT 10""".stripMargin,
+    // Same memoized PQ index, query vector, k, nprobe and rerank window as ann_ivf_pq_topk.
+    "search_dsl_json_knn_pq" -> AnnEntries.oracleSql("ann_ivf_pq_topk"),
 
     // indexed edge-ngram (2..8) membership of 'spa' ≡ a token with that
     // prefix (the prefix length is inside the gram range)
@@ -2212,12 +2126,7 @@ private[graft] object SearchWireEntries {
         |       count(user_id) AS n_users
         |FROM events WHERE value >= 100 GROUP BY 1 ORDER BY bucket""".stripMargin,
 
-    "search_dsl_json_dh_timezone" ->
-      """SELECT CAST((date_trunc('day', (ts AT TIME ZONE 'UTC') AT TIME ZONE 'America/New_York')
-        |             AT TIME ZONE 'America/New_York') AT TIME ZONE 'UTC' AS TIMESTAMP) AS bucket,
-        |       count(*) AS doc_count,
-        |       round(CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE), 2) AS total
-        |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin,
+    "search_dsl_json_dh_timezone" -> SearchEntries.oracleSql("search_date_histogram_tz"),
 
     "search_dsl_json_range_timezone" ->
       """SELECT event_id, ts FROM events
@@ -2286,11 +2195,7 @@ private[graft] object SearchWireEntries {
         |WHERE len(list_filter(string_split(lower(text), ' '), t -> levenshtein(t, 'sparc') <= 1)) > 0
         |ORDER BY doc_id""".stripMargin,
 
-    "search_dsl_json_search_after" ->
-      """SELECT o_orderkey, CAST(o_orderdate AS DATE) AS o_orderdate, o_totalprice FROM orders
-        |WHERE o_orderdate < TIMESTAMP '2000-06-15 00:00:00'
-        |   OR (o_orderdate = TIMESTAMP '2000-06-15 00:00:00' AND o_orderkey < 900)
-        |ORDER BY o_orderdate DESC, o_orderkey DESC LIMIT 10""".stripMargin,
+    "search_dsl_json_search_after" -> SearchEntries.oracleSql("search_search_after"),
 
     "search_dsl_json_highlight" ->
       """SELECT doc_id, n_chars,
@@ -2404,25 +2309,13 @@ private[graft] object SearchWireEntries {
         |       round(avg(price_p50) OVER (ORDER BY bucket ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 6) AS trend
         |FROM b ORDER BY bucket""".stripMargin,
 
-    "search_dsl_json_significant" ->
-      """SELECT term, fg_count, bg_count,
-        |       round(CAST(fg_count AS DOUBLE) / fg_total - CAST(bg_count AS DOUBLE) / bg_total, 6) AS score
-        |FROM (SELECT event_type AS term,
-        |             count(*) FILTER (WHERE value > 150) AS fg_count,
-        |             count(*) AS bg_count
-        |      FROM events GROUP BY 1) a
-        |CROSS JOIN (SELECT count(*) FILTER (WHERE value > 150) AS fg_total, count(*) AS bg_total FROM events) b
-        |ORDER BY score DESC, term""".stripMargin,
+    "search_dsl_json_significant" -> SearchEntries.oracleSql("search_significant_terms"),
 
     "search_dsl_json_rare_terms" ->
       """SELECT lang AS "key", count(*) AS doc_count FROM documents
         |GROUP BY 1 HAVING count(*) <= 100 ORDER BY doc_count, "key"""".stripMargin,
 
-    "search_dsl_json_composite" ->
-      """SELECT o_orderpriority AS k0, o_orderstatus AS k1, count(*) AS doc_count
-        |FROM orders GROUP BY 1, 2
-        |HAVING o_orderpriority > '2-HIGH' OR (o_orderpriority = '2-HIGH' AND o_orderstatus > 'F')
-        |ORDER BY k0, k1 LIMIT 5""".stripMargin,
+    "search_dsl_json_composite" -> SearchEntries.oracleSql("search_composite_after"),
 
     "search_dsl_json_multi_terms_sparse" ->
       """WITH t AS (SELECT o_custkey, max(o_orderpriority) AS top_priority
@@ -2513,23 +2406,9 @@ private[graft] object SearchWireEntries {
         |SELECT 'q_label2' AS request_id, round(d2.dcg / i2.ideal, 6) AS metric_score FROM d2, i2
         |ORDER BY request_id""".stripMargin,
 
-    "search_dsl_json_top_hits" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rank FROM (
-        |  SELECT o_orderpriority, o_orderkey, o_totalprice,
-        |         CAST(row_number() OVER (PARTITION BY o_orderpriority
-        |              ORDER BY o_totalprice DESC, o_orderkey) AS INTEGER) AS rank
-        |  FROM orders) t
-        |WHERE rank <= 3 ORDER BY o_orderpriority, rank""".stripMargin,
+    "search_dsl_json_top_hits" -> SearchEntries.oracleSql("search_top_hits"),
 
-    "search_dsl_json_span_near" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |p AS (SELECT doc_id,
-        |        list_filter(range(1, len(toks) + 1), i -> toks[i] = 'big') AS pa,
-        |        list_filter(range(1, len(toks) + 1), i -> toks[i] = 'table') AS pb
-        |      FROM t)
-        |SELECT doc_id FROM p
-        |WHERE len(list_filter(pa, a -> len(list_filter(pb, b -> b > a AND b - a <= 3)) > 0)) > 0
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_span_near" -> SearchEntries.oracleSql("search_span_near"),
 
     "search_dsl_json_collapse" ->
       """SELECT o_orderpriority, o_orderkey, o_totalprice FROM (
@@ -2549,30 +2428,7 @@ private[graft] object SearchWireEntries {
         |      FROM orders GROUP BY 1) t
         |ORDER BY bucket""".stripMargin,
 
-    "search_dsl_json_hybrid" ->
-      """WITH base AS (SELECT doc_id AS id, string_split(lower(text), ' ') AS toks,
-        |                     len(string_split(lower(text), ' ')) AS dl
-        |              FROM documents),
-        |postings AS (SELECT id, dl, t.term, count(*) AS tf
-        |             FROM base, unnest(toks) AS t(term)
-        |             WHERE t.term IN ('spark', 'query') GROUP BY id, dl, t.term),
-        |docfreq AS (SELECT term, count(*) AS df FROM postings GROUP BY term),
-        |corpus AS (SELECT count(*) AS n_docs, avg(dl) AS avgdl FROM base),
-        |lex AS (SELECT id, CAST(row_number() OVER (ORDER BY score DESC, id) AS INTEGER) AS lex_rank FROM (
-        |  SELECT id, round(sum(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-        |                       * (tf * 2.2) / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))), 4) AS score
-        |  FROM postings JOIN docfreq USING (term) CROSS JOIN corpus
-        |  GROUP BY id ORDER BY score DESC, id LIMIT 10) t),
-        |vq AS (SELECT CAST(embedding AS DOUBLE[]) AS qe FROM embeddings WHERE vec_id = 0),
-        |vec AS (SELECT id, CAST(row_number() OVER (ORDER BY cos DESC, id) AS INTEGER) AS vec_rank FROM (
-        |  SELECT vec_id AS id,
-        |         round(list_cosine_similarity(CAST(embedding AS DOUBLE[]), (SELECT qe FROM vq)), 6) AS cos
-        |  FROM embeddings WHERE vec_id <> 0 ORDER BY cos DESC, id LIMIT 10) t)
-        |SELECT coalesce(lex.id, vec.id) AS id,
-        |       round(coalesce(CAST(1 AS DOUBLE) / (60 + lex_rank), 0.0)
-        |             + coalesce(CAST(1 AS DOUBLE) / (60 + vec_rank), 0.0), 6) AS rrf_score
-        |FROM lex FULL OUTER JOIN vec ON lex.id = vec.id
-        |ORDER BY rrf_score DESC, id LIMIT 10""".stripMargin,
+    "search_dsl_json_hybrid" -> SearchEntries.oracleSql("search_hybrid_rrf"),
 
     "search_dsl_json_hybrid_normalized" ->
       """WITH base AS (SELECT doc_id AS id, string_split(lower(text), ' ') AS toks,
@@ -2600,13 +2456,7 @@ private[graft] object SearchWireEntries {
         |FROM lexn l FULL OUTER JOIN vecn v ON l.id = v.id
         |ORDER BY hybrid_score DESC, id LIMIT 10""".stripMargin,
 
-    "search_dsl_json_pit" ->
-      """SELECT user_id, event_id, ts, event_type, value FROM (
-        |  SELECT user_id, event_id, ts, event_type, value,
-        |         row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events WHERE ts <= TIMESTAMP '2024-01-15 00:00:00') t
-        |WHERE rn = 1 AND event_type = 'purchase'
-        |ORDER BY user_id LIMIT 40""".stripMargin,
+    "search_dsl_json_pit" -> CdcEntries.oracleSql("cdc_pit_read"),
 
     "search_dsl_json_pit_search_after" ->
       """SELECT user_id, event_id, ts, event_type, value FROM (
@@ -2665,23 +2515,9 @@ private[graft] object SearchWireEntries {
       """SELECT doc_id, lang, source, n_chars, n_chars / 1000.0 AS n_kilochars
         |FROM documents WHERE lang = 'fr' ORDER BY doc_id""".stripMargin,
 
-    "search_dsl_json_neural_sparse" ->
-      """WITH base AS (SELECT doc_id AS id, string_split(lower(text), ' ') AS toks FROM documents),
-        |postings AS (SELECT id, t.term, count(*) AS tf
-        |             FROM base, unnest(toks) AS t(term)
-        |             WHERE t.term IN ('spark', 'query') GROUP BY id, t.term),
-        |docfreq AS (SELECT term, count(*) AS df FROM postings GROUP BY term),
-        |corpus AS (SELECT count(*) AS n_docs FROM base)
-        |SELECT id, round(sum(ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) * ln(1.0 + tf)), 4) AS score
-        |FROM postings JOIN docfreq USING (term) CROSS JOIN corpus
-        |GROUP BY id ORDER BY score DESC, id LIMIT 10""".stripMargin,
+    "search_dsl_json_neural_sparse" -> SearchEntries.oracleSql("search_neural_sparse"),
 
-    "search_dsl_json_bucket_selector" ->
-      """SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS bucket,
-        |       count(*) AS doc_count, max(o_totalprice) AS max_price
-        |FROM orders GROUP BY 1
-        |HAVING max(o_totalprice) > 450000
-        |ORDER BY bucket""".stripMargin,
+    "search_dsl_json_bucket_selector" -> SearchEntries.oracleSql("search_bucket_selector"),
 
     "search_dsl_json_nested" ->
       """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
@@ -2750,27 +2586,11 @@ private[graft] object SearchWireEntries {
         |       CAST(len(list_intersect(toks, ['spark', 'query', 'table'])) AS INTEGER) AS _score
         |FROM first ORDER BY _score DESC, n_chars DESC, doc_id LIMIT 10""".stripMargin,
 
-    "search_dsl_json_has_child" ->
-      """SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_returnflag = 'R' AND l_quantity >= 45)
-        |ORDER BY o_orderkey LIMIT 100""".stripMargin,
+    "search_dsl_json_has_child" -> SearchEntries.oracleSql("search_has_child"),
 
-    "search_dsl_json_has_parent" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem
-        |WHERE EXISTS (SELECT 1 FROM orders
-        |              WHERE o_orderkey = l_orderkey AND o_orderpriority = '1-URGENT'
-        |                AND o_totalprice > 400000)
-        |ORDER BY l_orderkey, l_linenumber, l_quantity""".stripMargin,
+    "search_dsl_json_has_parent" -> SearchEntries.oracleSql("search_has_parent"),
 
-    "search_dsl_json_terms_lookup" ->
-      """WITH lk AS (SELECT DISTINCT tok FROM (
-        |              SELECT unnest(string_split(lower(text), ' ')) AS tok
-        |              FROM documents WHERE doc_id = 0) t
-        |            WHERE len(tok) >= 5),
-        |toks AS (SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS tok
-        |         FROM documents WHERE doc_id <> 0)
-        |SELECT DISTINCT doc_id, lang FROM toks JOIN lk USING (tok) ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_terms_lookup" -> SearchEntries.oracleSql("search_terms_lookup"),
 
     "search_dsl_json_span_first" ->
       """SELECT doc_id FROM documents
@@ -2808,71 +2628,26 @@ private[graft] object SearchWireEntries {
         |          b -> b > a AND b - a <= 5 AND len(list_filter(pp, x -> x > a AND x < b)) > 0)) > 0)) > 0
         |ORDER BY doc_id""".stripMargin,
 
-    "search_dsl_json_match_bool_prefix" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)
-        |SELECT doc_id FROM t
-        |WHERE list_contains(toks, 'spark') OR len(list_filter(toks, x -> starts_with(x, 'quer'))) > 0
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_match_bool_prefix" -> SearchEntries.oracleSql("search_match_bool_prefix"),
 
-    "search_dsl_json_weighted_avg" ->
-      """SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE)
-        |           / CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE), 6) AS weighted_avg
-        |FROM lineitem""".stripMargin,
+    "search_dsl_json_weighted_avg" -> SearchEntries.oracleSql("search_weighted_avg"),
 
-    "search_dsl_json_multi_terms" ->
-      """SELECT o_orderpriority AS k0, o_orderstatus AS k1, count(*) AS doc_count
-        |FROM orders GROUP BY 1, 2 ORDER BY doc_count DESC, k0, k1 LIMIT 5""".stripMargin,
+    "search_dsl_json_multi_terms" -> SearchEntries.oracleSql("search_multi_terms"),
 
     "search_dsl_json_percentile_ranks" ->
       """SELECT round(avg(CASE WHEN o_totalprice <= 100000 THEN 1.0 ELSE 0.0 END), 6) AS pr_100000,
         |       round(avg(CASE WHEN o_totalprice <= 300000 THEN 1.0 ELSE 0.0 END), 6) AS pr_300000
         |FROM orders""".stripMargin,
 
-    "search_dsl_json_auto_date_histogram" ->
-      """WITH span AS (SELECT min(ts) AS lo, max(ts) AS hi FROM events),
-        |iv AS (SELECT CASE
-        |    WHEN date_diff('hour', lo, hi) + 1 <= 40 THEN 'hour'
-        |    WHEN date_diff('day', lo, hi) + 1 <= 40 THEN 'day'
-        |    WHEN date_diff('month', lo, hi) + 1 <= 40 THEN 'month'
-        |    ELSE 'year' END AS interval FROM span)
-        |SELECT interval, CAST(date_trunc(interval, ts) AS TIMESTAMP) AS bucket, count(*) AS doc_count
-        |FROM events, iv GROUP BY 1, 2 ORDER BY bucket""".stripMargin,
+    "search_dsl_json_auto_date_histogram" -> SearchEntries.oracleSql("search_auto_date_histogram"),
 
-    "search_dsl_json_string_stats" ->
-      """WITH chars AS (SELECT unnest(range(1, length(text) + 1)) AS i, text FROM documents),
-        |cc AS (SELECT substr(text, CAST(i AS INTEGER), 1) AS ch, count(*) AS n FROM chars GROUP BY 1),
-        |e AS (SELECT round((ln(sum(n)) - sum(n * ln(n)) / sum(n)) / ln(2.0), 6) AS entropy FROM cc)
-        |SELECT count(text) AS cnt,
-        |       CAST(min(length(text)) AS BIGINT) AS min_length,
-        |       CAST(max(length(text)) AS BIGINT) AS max_length,
-        |       round(avg(length(text)), 6) AS avg_length,
-        |       (SELECT entropy FROM e) AS entropy
-        |FROM documents""".stripMargin,
+    "search_dsl_json_string_stats" -> SearchEntries.oracleSql("search_string_stats"),
 
-    "search_dsl_json_mad" ->
-      """WITH m AS (SELECT quantile_cont(o_totalprice, 0.5) AS md FROM orders)
-        |SELECT round(quantile_cont(abs(o_totalprice - md), 0.5), 6) AS mad FROM orders, m""".stripMargin,
+    "search_dsl_json_mad" -> SearchEntries.oracleSql("search_mad"),
 
-    "search_dsl_json_extended_stats" ->
-      """WITH a AS (SELECT count(o_totalprice) AS cnt,
-        |                  round(min(o_totalprice), 2) AS mn, round(max(o_totalprice), 2) AS mx,
-        |                  sum(CAST(o_totalprice AS DECIMAL(12,2))) AS s,
-        |                  sum(CAST(o_totalprice AS DECIMAL(12,2)) * CAST(o_totalprice AS DECIMAL(12,2))) AS sq
-        |           FROM orders)
-        |SELECT CAST(cnt AS BIGINT) AS cnt, mn AS min_v, mx AS max_v,
-        |       round(CAST(s AS DOUBLE) / cnt, 6) AS avg_v,
-        |       round(CAST(s AS DOUBLE), 2) AS sum_v,
-        |       CAST(CAST(sq AS DECIMAL(38,4)) AS VARCHAR) AS sum_sq,
-        |       CASE WHEN sq < 1e9
-        |            THEN round((CAST(sq AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / cnt) / cnt, 6)
-        |            ELSE round((CAST(sq AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / cnt) / cnt, 2)
-        |       END AS variance,
-        |       round(sqrt((CAST(sq AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / cnt) / cnt), 6) AS std_dev
-        |FROM a""".stripMargin,
+    "search_dsl_json_extended_stats" -> SearchEntries.oracleSql("search_extended_stats"),
 
-    "search_dsl_json_histogram" ->
-      """SELECT floor(o_totalprice / 50000) * 50000 AS bucket, count(*) AS doc_count
-        |FROM orders GROUP BY 1 ORDER BY bucket""".stripMargin,
+    "search_dsl_json_histogram" -> SearchEntries.oracleSql("search_histogram_agg"),
 
     "search_dsl_json_histogram_metrics" ->
       """SELECT floor(value / 100) * 100 AS bucket, count(*) AS doc_count,
@@ -2950,26 +2725,11 @@ private[graft] object SearchWireEntries {
         |WHERE starts_with(lower(source), 'src1') AND source > 'src12'
         |ORDER BY source LIMIT 5""".stripMargin,
 
-    "search_dsl_json_intervals" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |p AS (SELECT doc_id,
-        |        list_filter(range(1, len(toks) + 1), i -> toks[i] = 'big' OR toks[i] = 'fast') AS pa,
-        |        list_filter(range(1, len(toks) + 1), i -> toks[i] = 'table') AS pb
-        |      FROM t)
-        |SELECT doc_id FROM p
-        |WHERE len(list_filter(pa, a -> len(list_filter(pb, b -> b > a AND b - a - 1 <= 3)) > 0)) > 0
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_intervals" -> SearchEntries.oracleSql("search_intervals_any"),
 
-    "search_dsl_json_match_phrase_prefix" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents)
-        |SELECT doc_id FROM t
-        |WHERE len(list_filter(range(1, len(toks)), i -> toks[i] = 'big' AND starts_with(toks[i+1], 'dat'))) > 0
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_match_phrase_prefix" -> SearchEntries.oracleSql("search_match_phrase_prefix"),
 
-    "search_dsl_json_constant_score" ->
-      """SELECT doc_id, 1.2 AS _score FROM documents
-        |WHERE list_contains(string_split(lower(text), ' '), 'vector')
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_constant_score" -> SearchEntries.oracleSql("search_constant_score"),
 
     "search_dsl_json_geo_polygon" ->
       s"""SELECT event_type AS key, count(*) AS doc_count
@@ -2994,31 +2754,16 @@ private[graft] object SearchWireEntries {
       """SELECT doc_id, lang, n_chars FROM documents
         |WHERE doc_id % 4 = 1 ORDER BY doc_id LIMIT 20 OFFSET 20""".stripMargin,
 
-    "search_dsl_json_synonyms" ->
-      """SELECT doc_id FROM documents
-        |WHERE list_contains(string_split(lower(text), ' '), 'join')
-        |   OR list_contains(string_split(lower(text), ' '), 'merge')
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_synonyms" -> SearchEntries.oracleSql("search_match_synonyms_index"),
 
     "search_dsl_json_runtime_field" ->
       """SELECT doc_id, n_chars FROM documents
         |WHERE ln(n_chars) * 2 + n_chars / 100 >= 14
         |ORDER BY doc_id""".stripMargin,
 
-    "search_dsl_json_span_or" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |p AS (SELECT doc_id, toks,
-        |        list_filter(range(1, len(toks) + 1), i -> toks[i] = 'big') AS pa,
-        |        list_filter(range(1, len(toks) + 1), i -> toks[i] = 'data') AS pb
-        |      FROM t)
-        |SELECT doc_id FROM p
-        |WHERE list_contains(toks, 'dup')
-        |   OR len(list_filter(pa, a -> len(list_filter(pb, b -> b > a AND b - a <= 2)) > 0)) > 0
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_span_or" -> SearchEntries.oracleSql("search_span_or"),
 
-    "search_dsl_json_scripted_metric" ->
-      """SELECT CAST(round(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,4))), 2) AS DOUBLE) AS value
-        |FROM lineitem""".stripMargin,
+    "search_dsl_json_scripted_metric" -> SearchEntries.oracleSql("search_scripted_metric"),
 
     "search_dsl_json_mlt" ->
       """SELECT doc_id FROM documents
@@ -3026,12 +2771,7 @@ private[graft] object SearchWireEntries {
         |                         ['big', 'data', 'table', 'scan'])) >= 3
         |ORDER BY doc_id""".stripMargin,
 
-    "search_dsl_json_geotile" ->
-      """SELECT CAST(floor((((user_id * 1237) % 18000) / 100.0 - 90.0) / 15.0) AS BIGINT) AS cell_y,
-        |       CAST(floor((((event_id * 91) % 36000) / 100.0 - 180.0) / 15.0) AS BIGINT) AS cell_x,
-        |       count(*) AS doc_count
-        |FROM events
-        |GROUP BY 1, 2 ORDER BY doc_count DESC, cell_y, cell_x LIMIT 20""".stripMargin,
+    "search_dsl_json_geotile" -> SearchEntries.oracleSql("search_geotile_grid"),
 
     "search_dsl_json_geo_centroid" ->
       """SELECT round(CAST(sum(CAST(((user_id * 1237) % 18000) / 100.0 - 90.0 AS DECIMAL(9,2))) AS DOUBLE) / count(*), 6) AS centroid_lat,
@@ -3079,39 +2819,8 @@ private[graft] object SearchWireEntries {
         |  WHERE o_orderstatus = 'F' AND o_totalprice <= 100000) t
         |ORDER BY o_orderkey, query_id""".stripMargin,
 
-    // same registry semantics as the structured search_percolate_indexed_rich
-    // (the wire bodies compile to the identical rich rows)
-    "search_dsl_json_percolate_indexed" ->
-      """WITH d AS (SELECT doc_id,
-        |                  string_split(lower(text), ' ') AS toks,
-        |                  ' ' || lower(text) || ' ' AS padded,
-        |                  string_split(lower(source), ' ') AS stoks,
-        |                  CAST(n_chars AS DOUBLE) AS rv
-        |           FROM documents)
-        |SELECT doc_id, query_id FROM (
-        |  SELECT doc_id, CAST(1 AS BIGINT) AS query_id FROM d
-        |    WHERE contains(padded, ' fast sort ')
-        |  UNION ALL
-        |  SELECT doc_id, 2 FROM d
-        |    WHERE list_has_any(toks, ['dup','vector']) AND list_has_all(toks, ['merge','batch'])
-        |  UNION ALL
-        |  SELECT doc_id, 3 FROM d
-        |    WHERE list_contains(toks, 'spark') AND list_has_any(stoks, ['src3','src5'])
-        |  UNION ALL
-        |  SELECT doc_id, 4 FROM d
-        |    WHERE contains(padded, ' table value ') AND rv > 200.0
-        |  UNION ALL
-        |  SELECT doc_id, 5 FROM d
-        |    WHERE list_has_all(toks, ['scan','filter']) AND contains(padded, ' the line ')
-        |  UNION ALL
-        |  SELECT doc_id, 6 FROM d WHERE list_contains(stoks, 'src1')
-        |  UNION ALL
-        |  SELECT doc_id, 7 FROM d WHERE contains(padded, ' a row fast ')
-        |  UNION ALL
-        |  SELECT doc_id, 8 FROM d
-        |    WHERE list_has_all(toks, ['window','group'])
-        |      AND list_has_any(stoks, ['src2','src4','src6']) AND rv <= 400.0
-        |) ORDER BY 1, 2""".stripMargin,
+    // The wire bodies compile to the same rich registry rows as the structured key.
+    "search_dsl_json_percolate_indexed" -> SearchEntries.oracleSql("search_percolate_indexed_rich"),
 
     "search_dsl_json_decay" ->
       """SELECT o_orderkey,
@@ -3129,13 +2838,7 @@ private[graft] object SearchWireEntries {
         |WHERE o_custkey IS NULL
         |ORDER BY c_custkey LIMIT 50""".stripMargin,
 
-    "search_dsl_json_simple_query_string" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE list_contains(string_split(lower(text), ' '), 'spark')
-        |  AND (list_contains(string_split(lower(text), ' '), 'merge')
-        |       OR contains(concat(' ', lower(text), ' '), ' hash join '))
-        |  AND NOT list_contains(string_split(lower(text), ' '), 'slow')
-        |ORDER BY doc_id""".stripMargin,
+    "search_dsl_json_simple_query_string" -> SearchEntries.oracleSql("search_simple_query_string"),
 
     "search_dsl_json_pinned" ->
       """SELECT "_id", lang FROM (
@@ -3152,46 +2855,13 @@ private[graft] object SearchWireEntries {
         |WHERE list_contains(string_split(lower(text), ' '), 'spark') AND n_chars >= 200
         |ORDER BY doc_id""".stripMargin,
 
-    "search_dsl_json_avg_bucket" ->
-      """SELECT round(CAST(sum(CAST(revenue AS DECIMAL(18,2))) AS DOUBLE) / count(*), 6) AS avg_bucket,
-        |       round(min(revenue), 2) AS min_bucket,
-        |       round(max(revenue), 2) AS max_bucket,
-        |       round(CAST(sum(CAST(revenue AS DECIMAL(18,2))) AS DOUBLE), 2) AS sum_bucket
-        |FROM (SELECT date_trunc('month', o_orderdate) AS bucket, round(sum(o_totalprice), 2) AS revenue
-        |      FROM orders GROUP BY 1) t""".stripMargin,
+    "search_dsl_json_avg_bucket" -> SearchEntries.oracleSql("search_avg_bucket"),
 
-    "search_dsl_json_max_bucket" ->
-      """WITH b AS (SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS bucket,
-        |                  round(sum(o_totalprice), 2) AS revenue
-        |           FROM orders GROUP BY 1)
-        |SELECT bucket, revenue FROM b
-        |WHERE revenue = (SELECT max(revenue) FROM b)
-        |ORDER BY bucket""".stripMargin,
+    "search_dsl_json_max_bucket" -> SearchEntries.oracleSql("search_max_bucket"),
 
-    "search_dsl_json_percentiles_bucket" ->
-      """SELECT round(quantile_cont(revenue, 0.25), 6) AS p25,
-        |       round(quantile_cont(revenue, 0.5), 6) AS p50,
-        |       round(quantile_cont(revenue, 0.75), 6) AS p75
-        |FROM (SELECT date_trunc('month', o_orderdate) AS bucket, round(sum(o_totalprice), 2) AS revenue
-        |      FROM orders GROUP BY 1) t""".stripMargin,
+    "search_dsl_json_percentiles_bucket" -> SearchEntries.oracleSql("search_percentiles_bucket"),
 
-    "search_dsl_json_change_point" ->
-      """WITH b AS (SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS bucket,
-        |                  round(sum(o_totalprice), 2) AS revenue
-        |           FROM orders GROUP BY 1),
-        |c AS (SELECT bucket,
-        |             sum(CAST(revenue AS DECIMAL(18,2))) OVER (ORDER BY bucket
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum,
-        |             CAST(row_number() OVER (ORDER BY bucket) AS BIGINT) AS k
-        |      FROM b),
-        |t AS (SELECT sum(CAST(revenue AS DECIMAL(18,2))) AS tot, count(*) AS n FROM b)
-        |SELECT bucket, left_mean, right_mean,
-        |       round(abs(left_mean - right_mean), 6) AS delta
-        |FROM (SELECT bucket,
-        |             round(CAST(cum AS DOUBLE) / k, 6) AS left_mean,
-        |             round(CAST(tot - cum AS DOUBLE) / (n - k), 6) AS right_mean
-        |      FROM c CROSS JOIN t WHERE k < n) s
-        |ORDER BY delta DESC, bucket LIMIT 1""".stripMargin,
+    "search_dsl_json_change_point" -> SearchEntries.oracleSql("search_change_point"),
 
     "search_dsl_json_bucket_script" ->
       """SELECT bucket, doc_count, revenue,
@@ -3201,16 +2871,7 @@ private[graft] object SearchWireEntries {
         |      FROM orders GROUP BY 1) t
         |ORDER BY bucket""".stripMargin,
 
-    "search_dsl_json_cumulative_cardinality" ->
-      """WITH fs AS (SELECT user_id, min(CAST(date_trunc('day', ts) AS TIMESTAMP)) AS bucket
-        |            FROM events GROUP BY 1),
-        |nk AS (SELECT bucket, count(*) AS new_keys FROM fs GROUP BY 1),
-        |spine AS (SELECT DISTINCT CAST(date_trunc('day', ts) AS TIMESTAMP) AS bucket FROM events)
-        |SELECT bucket, CAST(coalesce(new_keys, 0) AS BIGINT) AS new_keys,
-        |       CAST(sum(coalesce(new_keys, 0))
-        |            OVER (ORDER BY bucket ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |         AS cum_cardinality
-        |FROM spine LEFT JOIN nk USING (bucket) ORDER BY bucket""".stripMargin,
+    "search_dsl_json_cumulative_cardinality" -> SearchEntries.oracleSql("search_cumulative_cardinality"),
 
     "search_dsl_json_moving_ewma" ->
       """WITH daily AS (
@@ -3235,81 +2896,21 @@ private[graft] object SearchWireEntries {
         |               ROWS BETWEEN 5 PRECEDING AND CURRENT ROW), 6) AS p90_6m
         |FROM b ORDER BY bucket""".stripMargin,
 
-    "search_dsl_json_categorize_text" ->
-      """SELECT array_to_string(list_slice(string_split(lower(text), ' '), 1, 3), ' ') AS pattern,
-        |       count(*) AS doc_count
-        |FROM documents GROUP BY 1 ORDER BY doc_count DESC, pattern LIMIT 10""".stripMargin,
+    "search_dsl_json_categorize_text" -> SearchEntries.oracleSql("search_categorize_text"),
 
-    "search_dsl_json_variable_width_histogram" ->
-      """WITH s AS (SELECT quantile_cont(o_totalprice,
-        |             [0.0625, 0.1875, 0.3125, 0.4375, 0.5625, 0.6875, 0.8125, 0.9375]) AS seeds
-        |           FROM orders),
-        |a AS (SELECT o_totalprice,
-        |        CAST(list_position(list_transform(seeds, x -> abs(o_totalprice - x)),
-        |               list_aggregate(list_transform(seeds, x -> abs(o_totalprice - x)), 'min'))
-        |             AS BIGINT) AS bucket
-        |      FROM orders CROSS JOIN s)
-        |SELECT bucket, count(*) AS doc_count,
-        |       round(min(o_totalprice), 2) AS min_v,
-        |       round(max(o_totalprice), 2) AS max_v,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / count(*), 6) AS centroid
-        |FROM a GROUP BY 1 ORDER BY bucket""".stripMargin,
+    "search_dsl_json_variable_width_histogram" -> SearchEntries.oracleSql("search_variable_width_histogram"),
 
-    "search_dsl_json_ip_prefix" ->
-      """SELECT concat('10.', user_id % 200, '.0.0/16') AS prefix,
-        |       count(*) AS doc_count,
-        |       count(DISTINCT user_id) AS unique_users
-        |FROM events GROUP BY 1 ORDER BY doc_count DESC, prefix LIMIT 20""".stripMargin,
+    "search_dsl_json_ip_prefix" -> SearchEntries.oracleSql("search_ip_prefix"),
 
-    "search_dsl_json_ip_range" ->
-      """SELECT bucket, count(*) AS doc_count FROM (
-        |  SELECT CASE WHEN ipnum < 168099840.0 THEN 'a_low'
-        |              WHEN ipnum >= 168099840.0 AND ipnum < 168427520.0 THEN 'b_mid'
-        |              WHEN ipnum >= 168427520.0 THEN 'c_high' END AS bucket
-        |  FROM (SELECT CAST(10 * 16777216 + (user_id % 200) * 65536
-        |                    + ((user_id * 7) % 250) * 256 + (event_id % 254 + 1) AS DOUBLE) AS ipnum
-        |        FROM events) i) t
-        |WHERE bucket IS NOT NULL GROUP BY bucket ORDER BY bucket""".stripMargin,
+    "search_dsl_json_ip_range" -> SearchEntries.oracleSql("search_ip_range"),
 
-    "search_dsl_json_suggest" ->
-      """SELECT suggestion, freq, dist FROM (
-        |  SELECT t.tok AS suggestion, count(*) AS freq,
-        |         CAST(levenshtein(t.tok, 'sparc') AS INTEGER) AS dist
-        |  FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) t
-        |  GROUP BY 1) v
-        |WHERE dist <= 2 AND dist > 0
-        |ORDER BY dist, freq DESC, suggestion LIMIT 5""".stripMargin,
+    "search_dsl_json_suggest" -> SearchEntries.oracleSql("search_suggest"),
 
-    "search_dsl_json_suggest_completion" ->
-      """SELECT tok AS suggestion, count(*) AS freq
-        |FROM (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents) t
-        |WHERE starts_with(tok, 's')
-        |GROUP BY tok ORDER BY freq DESC, tok LIMIT 5""".stripMargin,
+    "search_dsl_json_suggest_completion" -> SearchEntries.oracleSql("search_suggest_completion"),
 
-    "search_dsl_json_geo_distance_rings" ->
-      """WITH g AS (
-        |  SELECT ((user_id * 1237) % 18000) / 100.0 - 90.0 AS lat,
-        |         ((event_id * 91) % 36000) / 100.0 - 180.0 AS lon
-        |  FROM events),
-        |d AS (
-        |  SELECT sqrt((lat - 10.0) * (lat - 10.0)
-        |              + ((lon - 20.0) * 0.7071067811865476) * ((lon - 20.0) * 0.7071067811865476))
-        |         * 111.195 AS dist_km
-        |  FROM g)
-        |SELECT CASE WHEN dist_km < 1000.0 THEN '*-1000.0'
-        |            WHEN dist_km < 3000.0 THEN '1000.0-3000.0'
-        |            WHEN dist_km < 8000.0 THEN '3000.0-8000.0'
-        |            ELSE '8000.0-*' END AS ring,
-        |       count(*) AS doc_count
-        |FROM d GROUP BY 1 ORDER BY ring""".stripMargin,
+    "search_dsl_json_geo_distance_rings" -> SearchEntries.oracleSql("search_geo_distance_rings"),
 
-    "search_dsl_json_rate" ->
-      """SELECT bucket, doc_count,
-        |       round(CAST(s AS DOUBLE), 2) AS month_sum,
-        |       round(CAST(s AS DOUBLE) / date_diff('day', bucket, bucket + INTERVAL 1 MONTH), 6) AS per_day_rate
-        |FROM (SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS bucket,
-        |             count(*) AS doc_count, sum(CAST(o_totalprice AS DECIMAL(12,2))) AS s
-        |      FROM orders GROUP BY 1) t ORDER BY bucket""".stripMargin,
+    "search_dsl_json_rate" -> SearchEntries.oracleSql("search_rate"),
 
     "search_dsl_json_bucket_sort" ->
       """SELECT CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS bucket,
@@ -3318,40 +2919,13 @@ private[graft] object SearchWireEntries {
         |FROM orders GROUP BY 1
         |ORDER BY revenue DESC, bucket LIMIT 5""".stripMargin,
 
-    "search_dsl_json_filters_other" ->
-      """SELECT CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS clicks,
-        |       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errors,
-        |       CAST(sum(CASE WHEN event_type NOT IN ('click', 'error') THEN 1 ELSE 0 END) AS BIGINT) AS other_bucket
-        |FROM events""".stripMargin,
+    "search_dsl_json_filters_other" -> SearchEntries.oracleSql("search_filters_other"),
 
-    "search_dsl_json_geo_bounds" ->
-      """SELECT event_type,
-        |       max(((user_id * 1237) % 18000) / 100.0 - 90.0) AS top,
-        |       min(((user_id * 1237) % 18000) / 100.0 - 90.0) AS bottom,
-        |       min(((event_id * 91) % 36000) / 100.0 - 180.0) AS "left",
-        |       max(((event_id * 91) % 36000) / 100.0 - 180.0) AS "right",
-        |       count(*) AS doc_count
-        |FROM events
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "search_dsl_json_geo_bounds" -> SearchEntries.oracleSql("search_geo_bounds"),
 
-    "search_dsl_json_frequent_pairs" ->
-      """WITH baskets AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS day, event_type FROM events),
-        |n AS (SELECT count(*) AS n_baskets FROM (SELECT DISTINCT user_id, day FROM baskets) t)
-        |SELECT a.event_type AS item1, b.event_type AS item2,
-        |       count(*) AS pair_count,
-        |       round(count(*) / (SELECT n_baskets FROM n), 6) AS support
-        |FROM baskets a JOIN baskets b USING (user_id, day)
-        |WHERE a.event_type < b.event_type
-        |GROUP BY 1, 2 ORDER BY pair_count DESC, item1, item2 LIMIT 10""".stripMargin,
+    "search_dsl_json_frequent_pairs" -> SearchEntries.oracleSql("search_frequent_pairs"),
 
-    "search_dsl_json_geo_line" ->
-      """WITH g AS (SELECT event_type, ts, event_id,
-        |             CAST(CAST(((user_id * 1237) % 18000) / 100.0 - 90.0 AS DECIMAL(6,2)) AS VARCHAR) AS slat,
-        |             CAST(CAST(((event_id * 91) % 36000) / 100.0 - 180.0 AS DECIMAL(6,2)) AS VARCHAR) AS slon
-        |           FROM events)
-        |SELECT event_type,
-        |       array_to_string(list(concat(slat, ',', slon) ORDER BY ts, event_id)[1:10], ' ') AS line
-        |FROM g GROUP BY 1 ORDER BY event_type""".stripMargin,
+    "search_dsl_json_geo_line" -> SearchEntries.oracleSql("search_geo_line"),
 
     "search_dsl_json_script_score" ->
       """SELECT doc_id, round(ln(1 + n_chars) * 1.5 + CAST(doc_id % 7 AS DOUBLE), 6) AS "_score"
@@ -3388,108 +2962,27 @@ private[graft] object SearchWireEntries {
       """SELECT o_orderkey, o_totalprice * 1.1 AS charge
         |FROM orders WHERE o_orderpriority = '1-URGENT' ORDER BY o_orderkey""".stripMargin,
 
-    "search_dsl_json_matrix_stats" ->
-      """WITH m AS (
-        |  SELECT count(*) AS n,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sq,
-        |         CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sp,
-        |         CAST(sum(CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sd,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sqq,
-        |         CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS spp,
-        |         CAST(sum(CAST(l_discount AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sdd,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sqp,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sqd,
-        |         CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS spd
-        |  FROM lineitem)
-        |SELECT field_x, field_y,
-        |       round((sxy - sx * sy / n) / (n - 1), 6) AS covariance,
-        |       round((n * sxy - sx * sy) / (sqrt(n * sxx - sx * sx) * sqrt(n * syy - sy * sy)), 6) AS correlation
-        |FROM (
-        |  SELECT 'l_quantity' AS field_x, 'l_extendedprice' AS field_y, n, sqp AS sxy, sq AS sx, sp AS sy, sqq AS sxx, spp AS syy FROM m
-        |  UNION ALL
-        |  SELECT 'l_quantity', 'l_discount', n, sqd, sq, sd, sqq, sdd FROM m
-        |  UNION ALL
-        |  SELECT 'l_extendedprice', 'l_discount', n, spd, sp, sd, spp, sdd FROM m) t
-        |ORDER BY field_x, field_y""".stripMargin,
+    "search_dsl_json_matrix_stats" -> SearchEntries.oracleSql("search_matrix_stats"),
 
-    "search_dsl_json_global" ->
-      """SELECT CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-        |       round(CAST(sum(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(12,2)) END) AS DOUBLE)
-        |             / sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END), 6) AS hits_avg_value,
-        |       count(*) AS n_total,
-        |       round(CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) / count(*), 6) AS total_avg_value
-        |FROM events""".stripMargin,
+    "search_dsl_json_global" -> SearchEntries.oracleSql("search_global_agg"),
 
-    "search_dsl_json_children" ->
-      """SELECT o_orderpriority AS key, count(*) AS child_count, sum(l_quantity) AS total_qty
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
+    "search_dsl_json_children" -> SearchEntries.oracleSql("search_children_agg"),
 
-    "search_dsl_json_sampler" ->
-      """WITH s AS (SELECT doc_id, lang, source, md5(CAST(doc_id AS VARCHAR)) AS h FROM documents
-        |           QUALIFY row_number() OVER (PARTITION BY lang ORDER BY h, doc_id) <= 20)
-        |SELECT source AS key, count(*) AS doc_count FROM s
-        |GROUP BY 1 ORDER BY doc_count DESC, key""".stripMargin,
+    "search_dsl_json_sampler" -> SearchEntries.oracleSql("search_sampler_diversified"),
 
-    "search_dsl_json_date_histogram_filled" ->
-      """WITH b AS (SELECT CAST(date_trunc('day', o_orderdate) AS TIMESTAMP) AS bucket,
-        |                  count(*) AS cnt, round(sum(o_totalprice), 2) AS rev
-        |           FROM orders WHERE o_totalprice > 450000 GROUP BY 1),
-        |spine AS (SELECT unnest(generate_series((SELECT min(bucket) FROM b),
-        |                                        (SELECT max(bucket) FROM b),
-        |                                        INTERVAL 1 DAY)) AS bucket)
-        |SELECT spine.bucket, coalesce(cnt, 0) AS doc_count, coalesce(rev, 0.0) AS revenue
-        |FROM spine LEFT JOIN b USING (bucket) ORDER BY bucket""".stripMargin,
+    "search_dsl_json_date_histogram_filled" -> SearchEntries.oracleSql("search_date_histogram_filled"),
 
-    "search_dsl_json_phrase_suggest" ->
-      """WITH toks AS (SELECT doc_id, tok, p FROM (
-        |       SELECT doc_id, unnest(string_split(lower(text), ' ')) AS tok,
-        |              generate_subscripts(string_split(lower(text), ' '), 1) AS p
-        |       FROM documents) t),
-        |vocab AS (SELECT tok AS term, count(*) AS freq FROM toks GROUP BY 1),
-        |c1 AS (SELECT term AS w1, freq AS f1, CAST(levenshtein(term, 'fast') AS INTEGER) AS d1
-        |       FROM vocab WHERE abs(len(term) - 4) <= 2 AND levenshtein(term, 'fast') <= 2),
-        |c2 AS (SELECT term AS w2, freq AS f2, CAST(levenshtein(term, 'qery') AS INTEGER) AS d2
-        |       FROM vocab WHERE abs(len(term) - 4) <= 2 AND levenshtein(term, 'qery') <= 2),
-        |bi AS (SELECT w1, w2, count(*) AS c12 FROM (
-        |         SELECT doc_id, tok AS w1, lead(tok) OVER (PARTITION BY doc_id ORDER BY p) AS w2
-        |         FROM toks) b
-        |       WHERE w2 IS NOT NULL GROUP BY 1, 2)
-        |SELECT concat(w1, ' ', w2) AS suggestion,
-        |       d1 + d2 AS dist,
-        |       coalesce(c12, 0) AS bigram_count,
-        |       f1 + f2 AS cand_freq
-        |FROM c1 CROSS JOIN c2 LEFT JOIN bi USING (w1, w2)
-        |ORDER BY bigram_count DESC, dist, cand_freq DESC, suggestion LIMIT 5""".stripMargin,
+    "search_dsl_json_phrase_suggest" -> SearchEntries.oracleSql("search_phrase_suggest"),
 
-    "search_dsl_json_missing" ->
-      """WITH buyers AS (SELECT DISTINCT o_custkey FROM orders WHERE o_totalprice > 450000)
-        |SELECT count(*) AS doc_count,
-        |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) / count(*), 6) AS avg_acctbal
-        |FROM customer LEFT JOIN buyers ON c_custkey = o_custkey
-        |WHERE o_custkey IS NULL""".stripMargin,
+    "search_dsl_json_missing" -> SearchEntries.oracleSql("search_missing_agg"),
 
-    "search_dsl_json_filter_agg" ->
-      """SELECT count(*) AS doc_count,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / count(*), 6) AS avg_price
-        |FROM orders WHERE o_orderpriority = '1-URGENT'""".stripMargin,
+    "search_dsl_json_filter_agg" -> SearchEntries.oracleSql("search_filter_agg"),
 
-    "search_dsl_json_nested_agg" ->
-      """SELECT count(*) AS doc_count,
-        |       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / count(*), 6) AS avg_l_quantity
-        |FROM lineitem""".stripMargin,
+    "search_dsl_json_nested_agg" -> SearchEntries.oracleSql("search_nested_agg"),
 
-    "search_dsl_json_reverse_nested" ->
-      """SELECT l_returnflag AS key, count(*) AS doc_count,
-        |       count(DISTINCT l_orderkey) AS parent_count
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
+    "search_dsl_json_reverse_nested" -> SearchEntries.oracleSql("search_reverse_nested"),
 
-    "search_dsl_json_parent" ->
-      """WITH p AS (SELECT DISTINCT l_returnflag AS key, l_orderkey FROM lineitem)
-        |SELECT key, count(*) AS parent_count,
-        |       round(CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) / count(*), 6) AS avg_order_value
-        |FROM p JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY key ORDER BY key""".stripMargin,
+    "search_dsl_json_parent" -> SearchEntries.oracleSql("search_parent_agg"),
 
     "search_dsl_json_script_sort" ->
       """SELECT doc_id, n_chars FROM documents
@@ -3516,14 +3009,6 @@ private[graft] object SearchWireEntries {
         |SELECT source AS key, count(*) AS doc_count FROM s
         |GROUP BY 1 ORDER BY doc_count DESC, key""".stripMargin,
 
-    "search_dsl_json_span_multi" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
-        |p AS (SELECT doc_id,
-        |        list_filter(range(1, len(toks) + 1), i -> starts_with(toks[i], 'spar')) AS pa,
-        |        list_filter(range(1, len(toks) + 1), i -> toks[i] = 'fast') AS pb
-        |      FROM t)
-        |SELECT doc_id FROM p
-        |WHERE len(list_filter(pa, a -> len(list_filter(pb, b -> b <> a AND abs(b - a) <= 5)) > 0)) > 0
-        |ORDER BY doc_id""".stripMargin
+    "search_dsl_json_span_multi" -> SearchEntries.oracleSql("search_span_multi")
   )
 }

@@ -721,7 +721,7 @@ private[graft] object TextEntries {
     })
   )
 
-  val oracleSql: Map[String, String] = Map(
+  private val own: Map[String, String] = Map(
 
     "sample_weighted" ->
       """SELECT lang, CAST(count(*) AS BIGINT) AS n_kept FROM documents
@@ -795,19 +795,6 @@ private[graft] object TextEntries {
         |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id, count(*) AS n_shared
         |FROM cg JOIN bench_g USING (gram)
         |GROUP BY 1, 2 ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // The bloom path is exact end-to-end (prune + confirm), so it shares
-    // the same oracle as text_decontaminate.
-    "text_decontaminate_bloom" ->
-      """WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents),
-        |g AS (SELECT doc_id,
-        |             unnest(list_distinct([t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3]
-        |                                   for i in generate_series(1, len(t) - 3)])) AS gram
-        |      FROM toks WHERE len(t) >= 4),
-        |bench AS (SELECT DISTINCT gram FROM g WHERE doc_id < 10)
-        |SELECT g.doc_id, count(*) AS n_shared
-        |FROM g JOIN bench USING (gram) WHERE g.doc_id >= 10
-        |GROUP BY 1 ORDER BY doc_id""".stripMargin,
 
     "text_pii_redact" ->
       """SELECT c_custkey AS id,
@@ -1171,5 +1158,10 @@ private[graft] object TextEntries {
         |FROM joint JOIN lm USING (w1) JOIN rm USING (w2) CROSS JOIN tot
         |WHERE c12 >= 20
         |ORDER BY pmi DESC, w1, w2 LIMIT 20""".stripMargin
+  )
+
+  val oracleSql: Map[String, String] = own ++ Map(
+    // The bloom path prunes, then confirms exactly, so it answers as text_decontaminate does.
+    "text_decontaminate_bloom" -> own("text_decontaminate")
   )
 }

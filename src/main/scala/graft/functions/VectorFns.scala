@@ -64,8 +64,6 @@ object VectorFns {
       )
     )
 
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine similarity via the native codegen'd [[CosineSim]] expression
     * (the UDF kernel remains registered for SQL as `cosine_sim`).
     * Float arrays are read natively — no cast-to-array<double> copy per

@@ -19,10 +19,6 @@ object Dedup {
     df.groupBy(md5(content).as("h"))
       .agg(count(lit(1)).as("n_dups"), min(id).as("keep_id"))
 
-  /** Keep-first-id exact dedup: the surviving rows' ids. */
-  def exactKeepIds(df: DataFrame, content: Column, id: Column): DataFrame =
-    exactGroups(df, content, id).select(col("keep_id"))
-
   /** Near-dup groups via the normalization fingerprint (lower/dedupe/sort
     * tokens): catches reorderings and repeated-token variants.
     */

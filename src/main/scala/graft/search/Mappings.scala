@@ -146,12 +146,6 @@ final case class IndexMapping(
   def withAnalyzer(field: String, a: Analyzer): IndexMapping =
     copy(analyzers = analyzers + (field -> a))
 
-  /** Declare an asymmetric query-time chain for a field (the mapping's
-    * `search_analyzer` element).
-    */
-  def withSearchAnalyzer(field: String, a: Analyzer): IndexMapping =
-    copy(searchAnalyzers = searchAnalyzers + (field -> a))
-
   /** Declare query-time synonym expansion (the synonym_graph token
     * filter in its query-time form — the recommended OpenSearch setup,
     * since index-time synonyms bake the dictionary into the postings).

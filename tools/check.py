@@ -8,10 +8,14 @@ Usage: python3 tools/check.py <sfdir> <outdir>
      dump: schema (column names), row count, and value hash with columns
      sorted by name.
 """
+import atexit
 import json
 import sys
 import glob
 import os
+import re
+import shutil
+import tempfile
 
 import duckdb
 
@@ -113,18 +117,25 @@ def main():
         selftest()
         return
     sfdir, outdir = sys.argv[1], sys.argv[2]
-    con = duckdb.connect()
     # GRAFT_CHECK_MEM / GRAFT_CHECK_THREADS: bound DuckDB for the scaled
     # gates (r19: the sf1ish run OOM'd inside a posting-list oracle with
     # >100 GB free — an unbounded intermediate; a memory_limit makes
-    # DuckDB spill instead of die).
+    # DuckDB spill instead of die). Each run spills to its own directory,
+    # so concurrent gates never share spill files.
     mem = os.environ.get("GRAFT_CHECK_MEM")
-    if mem:
-        con.execute(f"SET memory_limit='{mem}'")
-        con.execute(f"SET temp_directory='/tmp/duckdb_spill'")
+    if mem and not re.fullmatch(r"\d+(\.\d+)?\s*[KMGT]i?B", mem, re.IGNORECASE):
+        sys.exit(f"check.py: GRAFT_CHECK_MEM={mem!r} is not a size such as 8GB or 512MiB")
     thr = os.environ.get("GRAFT_CHECK_THREADS")
+    if thr and not re.fullmatch(r"[1-9]\d*", thr):
+        sys.exit(f"check.py: GRAFT_CHECK_THREADS={thr!r} is not a positive thread count")
+    con = duckdb.connect()
+    if mem:
+        spill = tempfile.mkdtemp(prefix="duckdb_spill_")
+        atexit.register(shutil.rmtree, spill, ignore_errors=True)
+        con.execute(f"SET memory_limit='{mem}'")
+        con.execute(f"SET temp_directory='{spill}'")
     if thr:
-        con.execute(f"SET threads={int(thr)}")
+        con.execute(f"SET threads={thr}")
     for p in glob.glob(f"{sfdir}/*.parquet"):
         name = os.path.basename(p).replace(".parquet", "")
         # testdata ships single files; ScaleData writes Spark-style
